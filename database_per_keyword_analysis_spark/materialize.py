@@ -1,5 +1,8 @@
-"""Lifecycle registry for materialized query intermediates.
+"""Lifecycle of materialized query intermediates: in-session persists
+and the build-once ``.cache`` directories.
 
+In-session persists
+-------------------
 Several query paths materialize a bounded intermediate during query
 CONSTRUCTION — ``persist()`` for tables whose lineage must stay
 visible to plan pins, ``localCheckpoint()`` for lineage truncation —
@@ -32,12 +35,54 @@ done with a query's returned DataFrame calls
 DataFrames themselves stay valid — a re-consumed plan silently
 recomputes from its parquet inputs).  ``spark.catalog.clearCache()``
 is the blunter equivalent (it also drops caches the CALLER created);
-this seam only touches what query construction registered.
+this seam only touches what query construction registered.  The
+registry is lock-guarded, so queries constructed on several threads
+can track while another thread releases.
+
+Build-once ``.cache`` directories
+---------------------------------
+Where the reference re-reads its base table for every analysis pass
+(main.py:240-306), the engine builds an index or layout once under
+``.cache`` and reuses it across calls and processes.  Every such
+directory comes from :func:`cache_dir`, and every immutable one is
+committed by :func:`build_once`.
+
+*The key.*  ``cache_dir(family, sf_dir, tables, **params)`` returns
+``<CACHE_ROOT>/<family>/<key>``, where the key is one md5 over:
+
+- the absolute path of the cache root — a copied checkout never
+  adopts entries written under another root, because streaming
+  checkpoints inside them record absolute paths and replaying one
+  elsewhere fails with ``Wrong basePath``;
+- ``abspath(sf_dir)`` — two fixtures never share an entry;
+- for each named table, every file's relative path, size and
+  ``st_mtime_ns``, walked recursively — a regenerated input at the
+  same path gets a new key instead of silently serving stale rows,
+  and nested/partitioned table directories are covered file by file;
+- the sorted build parameters (bucket counts, seeds, shingle sizes).
+
+*The commit.*  ``build_once(path, build)`` returns at once when
+``path`` holds the :data:`COMMIT_MARKER`.  Otherwise ``build(tmp)``
+writes into ``path + ".building-<pid>"``, the marker is written last,
+and the directory is renamed into place — so ``path`` either does not
+exist or is complete, whatever point a crash interrupts.  A build that
+raises leaves nothing committed and the next call rebuilds.  A rename
+that loses a race to a concurrent builder drops its own copy and uses
+the committed one; a marker-less directory already at ``path`` is a
+leftover (builders never write there directly) and is replaced.
+
+Streaming working directories (checkpoints, MERGE targets, mutable
+state) take only their key from :func:`cache_dir`; their own commit
+protocols live with the streaming operators.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
+import hashlib
+import os
+import shutil
+import threading
+from typing import TYPE_CHECKING, Callable
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -46,26 +91,33 @@ if TYPE_CHECKING:  # pragma: no cover
 # whether or not Python still holds the DataFrame, so a weakref that
 # died would strand the entry with no handle left to unpersist it.
 _PERSISTED: list["DataFrame"] = []
+_LOCK = threading.Lock()
 
 
 def track(df: "DataFrame") -> "DataFrame":
     """Register a persisted DataFrame for later release; returns it
     unchanged so call sites stay one expression."""
-    _PERSISTED.append(df)
+    with _LOCK:
+        _PERSISTED.append(df)
     return df
 
 
 def release_materialized() -> int:
     """Unpersist every DataFrame a query path registered since the
-    last call and drop the registry.  Blocking=False: block deletion
-    proceeds async on the executors while the caller moves on.  Also
-    nudges the GC so ContextCleaner can reap localCheckpoint blocks
-    whose Python handles died with the released queries.  Returns the
-    number of entries released."""
+    last call and drop the registry.  The list is swapped out under the
+    lock and unpersisted outside it, so a concurrent :func:`track`
+    lands in the next release, never in a list being iterated.
+    Blocking=False: block deletion proceeds async on the executors
+    while the caller moves on.  Also nudges the GC so ContextCleaner
+    can reap localCheckpoint blocks whose Python handles died with the
+    released queries.  Returns the number of entries released."""
     import gc
 
+    global _PERSISTED
+    with _LOCK:
+        released, _PERSISTED = _PERSISTED, []
     n = 0
-    for df in _PERSISTED:
+    for df in released:
         try:
             df.unpersist()
             n += 1
@@ -73,11 +125,78 @@ def release_materialized() -> int:
             # a stopped/replaced SparkSession invalidates the handle;
             # its cache died with the session, nothing to release
             pass
-    _PERSISTED.clear()
     gc.collect()
     return n
 
 
 def n_tracked() -> int:
     """Current registry size (tests/telemetry)."""
-    return len(_PERSISTED)
+    with _LOCK:
+        return len(_PERSISTED)
+
+
+CACHE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache"
+)
+COMMIT_MARKER = "_COMMITTED"
+
+
+def table_files(sf_dir: str, name: str) -> list[tuple[str, int, int]]:
+    """(relative path, size, st_mtime_ns) of every file of table
+    `name` under `sf_dir` — a single ``<name>.parquet`` file or a
+    directory walked recursively (partitioned/nested layouts), in a
+    stable order.  A missing table yields no files."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return [("", st.st_size, st.st_mtime_ns)]
+    out = []
+    for d, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            full = os.path.join(d, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return out
+
+
+def cache_dir(family: str, sf_dir: str, tables, **params) -> str:
+    """``<CACHE_ROOT>/<family>/<key>`` for a build over `tables` of
+    `sf_dir` with `params` — the key contract is in the module
+    docstring."""
+    root = os.path.abspath(CACHE_ROOT)
+    ident = (
+        root,
+        os.path.abspath(sf_dir),
+        [(t, table_files(sf_dir, t)) for t in tables],
+        sorted(params.items()),
+    )
+    key = hashlib.md5(repr(ident).encode()).hexdigest()[:16]
+    return os.path.join(root, family, key)
+
+
+def build_once(path: str, build: Callable[[str], object]) -> str:
+    """Commit `path` by running ``build(tmp)`` once — the commit
+    contract is in the module docstring.  Returns `path`."""
+    marker = os.path.join(path, COMMIT_MARKER)
+    if os.path.isfile(marker):
+        return path
+    tmp = f"{path}.building-{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    try:
+        build(tmp)
+        with open(os.path.join(tmp, COMMIT_MARKER), "w"):
+            pass
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            if os.path.isfile(marker):
+                return path  # lost the race to a concurrent builder
+            # an uncommitted leftover — never a live build, which only
+            # ever writes under its own tmp dir
+            shutil.rmtree(path)
+            os.rename(tmp, path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return path

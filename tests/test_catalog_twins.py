@@ -109,6 +109,15 @@ def test_every_deferred_twin_has_a_proof_in_this_file():
     assert missing == [], f"deferred twins without a collected proof: {missing}"
 
 
+def test_catalog_builds_no_cache_key_of_its_own():
+    # every .cache path and key comes from materialize.cache_dir; a
+    # hand-rolled md5 key or ".cache" join in the catalog is a copy of
+    # the seam growing back
+    src = open(catalog.__file__).read()
+    assert "hashlib.md5(" not in src
+    assert '".cache"' not in src
+
+
 def test_top_channels_salted_equals_primary(spark, sf_dir):
     _assert_equal_results(spark, sf_dir, "top_channels_salted", "top_channels_by_views")
 

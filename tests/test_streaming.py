@@ -660,12 +660,12 @@ def test_upsert_probe_is_key_filtered_and_clustered(spark, tmp_path):
 
 
 def test_upsert_cache_rebuilds_without_success_marker(spark, tmp_path, monkeypatch):
-    """Round-7 advice item 1: a source split dir without Spark's
-    _SUCCESS commit marker (crash mid-write) must be wiped and rebuilt,
-    not trusted."""
+    """Round-7 advice item 1: a source split dir without its commit
+    marker (crash mid-write) must be wiped and rebuilt, not trusted."""
     import os
 
     from database_per_keyword_analysis_spark import catalog
+    from database_per_keyword_analysis_spark.materialize import COMMIT_MARKER
 
     sf = "/root/testdata/sf0.001"
     repo = os.path.dirname(
@@ -682,15 +682,15 @@ def test_upsert_cache_rebuilds_without_success_marker(spark, tmp_path, monkeypat
     # can never disagree about the key formula
     base = catalog._upsert_cache_base(sf)
     assert base.startswith(os.path.join(repo, ".cache", "upsert"))
-    assert os.path.isfile(os.path.join(base, "src", "_SUCCESS"))
+    assert os.path.isfile(os.path.join(base, "src", COMMIT_MARKER))
     # simulate the crash window: marker gone, dir present, stale table
-    os.remove(os.path.join(base, "src", "_SUCCESS"))
+    os.remove(os.path.join(base, "src", COMMIT_MARKER))
     import shutil
 
     shutil.rmtree(os.path.join(base, "table"), ignore_errors=True)
     df2 = catalog.queries()["stream_user_latest_upsert"](spark, sf)
     assert sorted(tuple(r) for r in df2.collect()) == want
-    assert os.path.isfile(os.path.join(base, "src", "_SUCCESS"))
+    assert os.path.isfile(os.path.join(base, "src", COMMIT_MARKER))
 
 
 def test_stream_pit_dimension_rewrite_contract(spark, tmp_path):
@@ -932,8 +932,7 @@ def test_mutable_stream_base_sweep_rules(tmp_path):
     from database_per_keyword_analysis_spark import catalog as CAT
 
     family = f"testfam-{uuid.uuid4().hex[:8]}"
-    stat_file = tmp_path / "stat_anchor"
-    stat_file.write_text("x")
+    (tmp_path / "anchor.parquet").write_text("x")
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(CAT.__file__))),
         ".cache",
@@ -965,7 +964,7 @@ def test_mutable_stream_base_sweep_rules(tmp_path):
         )
         os.makedirs(mine_stale)
 
-        base = CAT._mutable_stream_base(family, str(tmp_path), str(stat_file))
+        base = CAT._mutable_stream_base(family, str(tmp_path), "anchor")
 
         assert os.path.isdir(young_legacy)  # age-gated, not raced
         assert not os.path.isdir(old_legacy)  # aged out
@@ -980,9 +979,7 @@ def test_mutable_stream_base_sweep_rules(tmp_path):
         # (e) adoption refresh: write a stale tick, re-enter, refreshed
         with open(base + ".owner", "w") as fh:
             fh.write("0")
-        assert CAT._mutable_stream_base(
-            family, str(tmp_path), str(stat_file)
-        ) == base
+        assert CAT._mutable_stream_base(family, str(tmp_path), "anchor") == base
         with open(base + ".owner") as fh:
             assert fh.read().strip() == my_tick
         # (f) a caller's first-run reseed deletes the DIR but the
