@@ -26,7 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import FIXTURE_CONFIG, KeywordConfig
-from .materialize import build_once, cache_dir, table_files
+from .materialize import build_once, cache_dir, cache_lock, commit, table_files
 from .operators import keywords as K
 from .operators import relational as R
 from .operators import stats as S
@@ -983,150 +983,38 @@ _DEFERRED_TWINS = {
 }
 
 
-def _mutable_stream_base(family: str, sf_dir: str, table: str) -> str:
-    """Per-process state directory for a MUTABLE streaming cache
-    (state/MV folded batch-by-batch + a structured-streaming
-    checkpoint): fixture-keyed AND pid-suffixed, so concurrent driver
-    processes get disjoint dirs (the r11-advice race fix), with the
-    pid VISIBLE in the dirname so this call can sweep siblings left by
-    DEAD processes — the leak the pure-md5 pid key could not clean up
-    (the pid was hashed away).  The sweep removes dirs whose recorded
-    pid no longer exists (os.kill(pid, 0) probe) or whose owner token
-    proves the pid was RECYCLED by a different process (each dir
-    records its owner's /proc start tick; a reused pid carries a
-    different tick, closing the r12-advice leak where a dead owner's
-    dir hid behind an unrelated live process indefinitely).  Pre-fix
-    legacy dirs (no '-p' suffix) are swept only once hours old: a
-    still-running pre-fix process writing a shared-key dir must not
-    lose its checkpoint mid-run (r12 advice); abandoned ones age out.
-    Within-process reuse (bench.py's steady state) is untouched: the
-    same process always maps to the same dir."""
-    import os
-    import shutil
-    import time
-
-    fixture = cache_dir(family, sf_dir, [table])
-    root = os.path.dirname(fixture)
-    base = f"{fixture}-p{os.getpid()}"
-    legacy_max_age_s = 6 * 3600
-    if os.path.isdir(root):
-        now = time.time()
-        for name in os.listdir(root):
-            path = os.path.join(root, name)
-            if path == base or not os.path.isdir(path):
-                continue
-            if "-p" in name:
-                try:
-                    pid = int(name.rsplit("-p", 1)[1])
-                except ValueError:
-                    continue
-                try:
-                    os.kill(pid, 0)
-                    # owner pid alive — but a RECYCLED pid is a dead
-                    # owner in disguise; the boot token disambiguates
-                    if _same_process(path, pid):
-                        continue  # genuinely alive — never touch
-                except ProcessLookupError:
-                    pass  # dead owner — safe to sweep
-                except PermissionError:
-                    continue  # alive under another uid
-                # TOCTOU guard (r14, r13 advice): between the probe
-                # above and the rmtree below, a process that recycled
-                # this pid can ADOPT the dir — its own
-                # _mutable_stream_base call rewrites the owner token
-                # to its incarnation.  Re-read at the last instant and
-                # skip if the dir now belongs to a live owner; the
-                # abandoned-dir case re-converges on a later sweep.
-                if _owned_by_live_process(path, pid):
-                    continue
-            else:
-                try:
-                    if now - os.stat(path).st_mtime < legacy_max_age_s:
-                        # young shared-key dir: a live pre-fix writer
-                        # may own it — age-gate rather than race it
-                        continue
-                except OSError:
-                    continue
-            shutil.rmtree(path, ignore_errors=True)
-            try:  # the dir's sibling owner token goes with it
-                os.remove(path + ".owner")
-            except OSError:
-                pass
-    os.makedirs(base, exist_ok=True)
-    # The owner token is a SIBLING file (base + '.owner'), NOT inside
-    # the dir: every stream query's first-run branch rmtrees `base`
-    # before reseeding, and an in-dir token would vanish with it,
-    # voiding the pid-recycle protection (r13 review finding).  It is
-    # also REWRITTEN whenever it names a different incarnation — a
-    # recycled pid adopting a dead predecessor's fixture key must not
-    # inherit the stale tick, or every OTHER process's sweep would
-    # read this live owner as 'recycled' and rmtree an active
-    # checkpoint (r13 review finding).
-    token = base + ".owner"
-    tick = _proc_start_tick(os.getpid())
-    if tick is not None:
-        recorded = None
-        try:
-            with open(token) as fh:
-                recorded = fh.read().strip()
-        except OSError:
-            pass
-        if recorded != tick:
-            with open(token, "w") as fh:
-                fh.write(tick)
-    return base
-
-
-def _proc_start_tick(pid: int) -> str | None:
-    """The process's kernel start time in clock ticks since boot —
-    field 22 of /proc/<pid>/stat (parsed after the parenthesised comm,
-    which may itself contain spaces).  (pid, start_tick) uniquely
-    identifies a process incarnation, which a bare pid does not (pid
-    reuse — the r12-advice leak).  Returns None off Linux or on any
-    read failure; callers then fall back to the plain liveness
-    probe."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as fh:
-            raw = fh.read().decode("ascii", "replace")
-        fields = raw.rsplit(")", 1)[1].split()
-        return fields[19]  # field 22 overall; 20th after comm
-    except (OSError, IndexError):
-        return None
-
-
-def _owned_by_live_process(state_dir: str, pid: int) -> bool:
-    """Last-instant re-probe before an irreversible rmtree (r13
-    advice): True when `pid` is alive NOW and the freshly re-read
-    owner token matches its incarnation — i.e. a new process recycled
-    the pid and adopted this dir between the sweep's first probe and
-    its delete.  Errs toward keeping the dir (PermissionError = alive
-    under another uid)."""
+def _fold_stream(
+    spark: SparkSession,
+    base: str,
+    seed: Callable[[str], None],
+    fold: Callable[[DataFrame, int], None],
+    read: Callable[[], object],
+):
+    """Shared body of the mutable streaming caches (an MV or state file
+    folded batch-by-batch): under the family lock, commit `base` with
+    ``seed(tmp)`` writing its ``src`` split and the state it folds
+    into, drain ``base/src`` through foreachBatch `fold` (4 files,
+    maxFilesPerTrigger=1, availableNow, checkpoint ``base/ckpt``) and
+    open the result with ``read()``.  The fold runs every call and is
+    exactly-once via the checkpoint: a later call or process schedules
+    zero new batches, and a fold a dead process left half-done resumes
+    to completion."""
     import os
 
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False  # still dead — delete proceeds
-    except PermissionError:
-        return True
-    return _same_process(state_dir, pid)
-
-
-def _same_process(state_dir: str, pid: int) -> bool:
-    """True unless the dir's owner token PROVES the live `pid` is a
-    different incarnation than the one that created it.  A missing
-    token or no /proc (non-Linux) errs on the safe side: treat the
-    live pid as the owner and keep the dir."""
-    import os
-
-    token = state_dir + ".owner"  # sibling file — survives reseeds
-    try:
-        with open(token) as fh:
-            recorded = fh.read().strip()
-    except OSError:
-        return True
-    current = _proc_start_tick(pid)
-    return current is None or not recorded or recorded == current
+    src = os.path.join(base, "src")
+    with cache_lock(base):
+        commit(base, seed)
+        (
+            spark.readStream.schema(spark.read.parquet(src).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .writeStream.foreachBatch(fold)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return read()
 
 
 def _emit_order() -> list[str]:
@@ -4599,18 +4487,19 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # availableNow re-run sees no new source files, processes zero
     # batches, and the committed output stands.
     base = cache_dir("ingest", sf_dir, ["documents"])
-    ING.run_ingest_dedup(
-        SCUR.read_documents_stream(spark, sf_dir),
-        index_path=f"{base}/index",
-        output_path=f"{base}/out",
-        checkpoint_dir=f"{base}/ckpt",
-    )
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(f"{base}/out")
-        .select("doc_id", "fingerprint", "is_duplicate", "dup_of")
-        .orderBy("doc_id")
-    )
+    with cache_lock(base):
+        ING.run_ingest_dedup(
+            SCUR.read_documents_stream(spark, sf_dir),
+            index_path=f"{base}/index",
+            output_path=f"{base}/out",
+            checkpoint_dir=f"{base}/ckpt",
+        )
+        return (
+            spark.read.option("recursiveFileLookup", "true")
+            .parquet(f"{base}/out")
+            .select("doc_id", "fingerprint", "is_duplicate", "dup_of")
+            .orderBy("doc_id")
+        )
 
 
 @register(
@@ -6268,29 +6157,30 @@ def q_stream_user_latest_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
-    src = build_once(
-        os.path.join(base, "src"),
-        lambda tmp: events.repartition(4).write.mode("overwrite").parquet(tmp),
-    )
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ING.run_streaming_upsert(
-        stream,
-        table_path=table,
-        checkpoint_dir=os.path.join(base, "ckpt"),
-        keys=["user_id"],
-        ts_col="ts",
-        tiebreak_col="event_id",
-        partition_col="event_type",
-    )
-    return (
-        spark.read.parquet(table)
-        .select("user_id", "event_id", "ts", "event_type", "value")
-        .orderBy("user_id")
-    )
+    with cache_lock(base):
+        src = commit(
+            os.path.join(base, "src"),
+            lambda tmp: events.repartition(4).write.mode("overwrite").parquet(tmp),
+        )
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        ING.run_streaming_upsert(
+            stream,
+            table_path=table,
+            checkpoint_dir=os.path.join(base, "ckpt"),
+            keys=["user_id"],
+            ts_col="ts",
+            tiebreak_col="event_id",
+            partition_col="event_type",
+        )
+        return (
+            spark.read.parquet(table)
+            .select("user_id", "event_id", "ts", "event_type", "value")
+            .orderBy("user_id")
+        )
 
 
 @register(
@@ -7694,7 +7584,7 @@ def q_event_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_orders_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming materialized-view refresh
-    (streaming/ingest.py:run_streaming_mv_refresh): orders_mv_upsert's
+    (streaming/ingest.py:refresh_mv_batch): orders_mv_upsert's
     CDC changeset arrives as a STREAM (4-file split,
     maxFilesPerTrigger=1 → 4 micro-batches) and folds into the
     persisted MV inside foreachBatch — signed partials are additive
@@ -7707,18 +7597,13 @@ def q_stream_orders_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     workdir (the stream_ingest_dedup seam).  NOVEL round-10 machinery
     → in-window at birth."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
     from .operators import merge as M
     from .streaming import ingest as ING
 
-    # MUTABLE cache (MV folded batch-by-batch + a streaming
-    # checkpoint): per-process dir + dead-pid sweep — see
-    # _mutable_stream_base.
-    base = _mutable_stream_base("mvstream", sf_dir, "orders")
-    src = os.path.join(base, "src")
+    base = cache_dir("mvstream", sf_dir, ["orders"])
     mv_path = os.path.join(base, "mv")
 
     orders = load(spark, sf_dir, "orders").select(
@@ -7739,10 +7624,9 @@ def q_stream_orders_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("grp"),
         F.col("o_totalprice").alias("price"),
     )
-    if not os.path.isfile(os.path.join(src, "_SUCCESS")):
-        # initial build: changeset files + seeded MV together (a crash
-        # anywhere before the _SUCCESS marker rebuilds both)
-        shutil.rmtree(base, ignore_errors=True)
+
+    def seed(tmp: str) -> None:
+        # changeset files + the MV seeded over the old snapshot
         ING.seed_mv(
             old.groupBy("grp").agg(
                 F.count(F.lit(1)).alias("n_orders"),
@@ -7750,33 +7634,27 @@ def q_stream_orders_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "rev_partial"
                 ),
             ),
-            mv_path,
+            os.path.join(tmp, "mv"),
         )
         changes = M.table_diff(old, new, ["o_orderkey"], include_old=True)
-        changes.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    ING.run_streaming_mv_refresh(
-        stream,
-        mv_path=mv_path,
-        checkpoint_dir=os.path.join(base, "ckpt"),
-        group_keys=["grp"],
-        count_col="n_orders",
-        sums={"rev_partial": "price"},
-    )
-    return (
-        ING.read_mv(spark, mv_path)
-        .select(
-            F.col("grp").alias("priority"),
-            "n_orders",
-            F.col("rev_partial").cast("double").alias("revenue"),
+        changes.repartition(4).write.mode("overwrite").parquet(
+            os.path.join(tmp, "src")
         )
-        .orderBy("priority")
+
+    mv = _fold_stream(
+        spark,
+        base,
+        seed,
+        lambda df, bid: ING.refresh_mv_batch(
+            df, mv_path, ["grp"], "n_orders", {"rev_partial": "price"}, bid
+        ),
+        lambda: ING.read_mv(spark, mv_path),
     )
+    return mv.select(
+        F.col("grp").alias("priority"),
+        "n_orders",
+        F.col("rev_partial").cast("double").alias("revenue"),
+    ).orderBy("priority")
 
 
 @register(
@@ -8857,7 +8735,6 @@ def q_stream_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     → in-window at birth; orders_evolved_scan (green r8-r9) rotated
     out with a NEW differential."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -8865,16 +8742,12 @@ def q_stream_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import textquality as TQ
     from .streaming import ingest as ING
 
-    # MUTABLE cache (counts MV + checkpoint): per-process dir +
-    # dead-pid sweep — see _mutable_stream_base.
-    base = _mutable_stream_base("driftstream", sf_dir, "documents")
-    src = os.path.join(base, "src")
+    base = cache_dir("driftstream", sf_dir, ["documents"])
     mv_path = os.path.join(base, "mv")
-
     docs = load(spark, sf_dir, "documents")
-    if not os.path.isfile(os.path.join(src, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
-        # seed: an EMPTY counts MV (the stream supplies every token)
+
+    def seed(tmp: str) -> None:
+        # an EMPTY counts MV (the stream supplies every token)
         empty = spark.createDataFrame(
             [],
             T.StructType(
@@ -8884,16 +8757,12 @@ def q_stream_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             ),
         )
-        ING.seed_mv(empty, mv_path)
+        ING.seed_mv(empty, os.path.join(tmp, "mv"))
         docs.where(F.col("doc_id") % 2 == 1).select(
             "doc_id", "text"
-        ).repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+        ).repartition(4).write.mode("overwrite").parquet(
+            os.path.join(tmp, "src")
+        )
 
     def fold(batch_df, batch_id):
         # one +1 insert-change row per token OCCURRENCE in the batch
@@ -8913,19 +8782,12 @@ def q_stream_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ING.refresh_mv_batch(changes, mv_path, ["token"], "n", {}, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    cb = _fold_stream(
+        spark, base, seed, fold, lambda: ING.read_mv(spark, mv_path)
+    ).select("token", F.col("n").alias("n_b"))
     ca = TQ.corpus_token_counts(
         docs.where(F.col("doc_id") % 2 == 0)
     ).select("token", F.col("n").alias("n_a"))
-    cb = ING.read_mv(spark, mv_path).select(
-        "token", F.col("n").alias("n_b")
-    )
     return TQ.drift_from_counts(ca, cb)
 
 
@@ -9319,7 +9181,6 @@ def q_stream_event_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import math
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -9327,36 +9188,16 @@ def q_stream_event_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     phi = 0.007
     cap = math.ceil(2.0 / phi)
-    # MUTABLE cache (r11 advice): state.json folded batch-by-batch +
-    # the structured-streaming checkpoint, so concurrent driver
-    # processes need disjoint dirs (the atomic-replace guard protects
-    # crashes, not concurrent writers); the per-process dir costs one
-    # extra fold per fresh process, which the steady-state path
-    # bench.py measures never pays.  Same scheme for the other mutable
-    # streaming caches (mvstream, driftstream, ksstream); the
-    # remaining fixture caches in this module are write-once
-    # (materialize.build_once) and keep the shared fixture key.
-    base = _mutable_stream_base("hhstream", sf_dir, "events")
-    src = os.path.join(base, "src")
+    base = cache_dir("hhstream", sf_dir, ["events"])
     state_path = os.path.join(base, "state.json")
-
     events = load(spark, sf_dir, "events")
-    if not os.path.isfile(os.path.join(src, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
-        tmp = state_path + ".tmp"
-        with open(tmp, "w") as f:
+
+    def seed(tmp: str) -> None:
+        with open(os.path.join(tmp, "state.json"), "w") as f:
             json.dump({"applied": [], "total": 0, "summary": {}}, f)
-        os.replace(tmp, state_path)
         events.select("user_id").repartition(4).write.mode(
             "overwrite"
-        ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+        ).parquet(os.path.join(tmp, "src"))
 
     def fold(batch_df, batch_id):
         # factored into scale.mg_fold_batch so the exactly-once
@@ -9364,15 +9205,11 @@ def q_stream_event_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no-op) is directly pytest-pinned (tests/test_scale.py)
         SC.mg_fold_batch(batch_df, batch_id, state_path, "user_id", cap)
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    with open(state_path) as f:
-        state = json.load(f)
+    def read():
+        with open(state_path) as f:
+            return json.load(f)
+
+    state = _fold_stream(spark, base, seed, fold, read)
     threshold = math.ceil(phi * state["total"])
     cand = spark.createDataFrame(
         [(int(k),) for k in state["summary"]] or [(None,)],
@@ -10294,22 +10131,17 @@ def _length_counts_stream(spark: SparkSession, sf_dir: str):
     folds cannot drift apart (the _zero_filled_daily hoist
     discipline)."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from .streaming import ingest as ING
 
-    # MUTABLE cache (MV fold + checkpoint): per-process dir + dead-pid
-    # sweep — see _mutable_stream_base
-    base = _mutable_stream_base("ksstream", sf_dir, "documents")
-    src = os.path.join(base, "src")
+    base = cache_dir("ksstream", sf_dir, ["documents"])
     mv_path = os.path.join(base, "mv")
-
     docs = load(spark, sf_dir, "documents")
-    if not os.path.isfile(os.path.join(src, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
+
+    def seed(tmp: str) -> None:
         empty = spark.createDataFrame(
             [],
             T.StructType(
@@ -10319,21 +10151,12 @@ def _length_counts_stream(spark: SparkSession, sf_dir: str):
                 ]
             ),
         )
-        ING.seed_mv(empty, mv_path)
+        ING.seed_mv(empty, os.path.join(tmp, "mv"))
         docs.where(
             (F.col("doc_id") % 2 == 1) & F.col("n_chars").isNotNull()
         ).select(F.col("n_chars").cast("long").alias("x")).repartition(
             4
-        ).write.mode("overwrite").parquet(src)
-    # the fold runs EVERY call (exactly-once via the checkpoint: a
-    # steady-state run schedules zero new batches, and a fold a dead
-    # process left half-done resumes to completion — the r12 behavior)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+        ).write.mode("overwrite").parquet(os.path.join(tmp, "src"))
 
     def fold(batch_df, batch_id):
         changes = batch_df.select(
@@ -10343,13 +10166,9 @@ def _length_counts_stream(spark: SparkSession, sf_dir: str):
         )
         ING.refresh_mv_batch(changes, mv_path, ["x"], "n", {}, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    b = _fold_stream(
+        spark, base, seed, fold, lambda: ING.read_mv(spark, mv_path)
     )
-    q.awaitTermination()
     a = (
         docs.where(
             (F.col("doc_id") % 2 == 0) & F.col("n_chars").isNotNull()
@@ -10357,7 +10176,6 @@ def _length_counts_stream(spark: SparkSession, sf_dir: str):
         .groupBy(F.col("n_chars").cast("long").alias("x"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    b = ING.read_mv(spark, mv_path)
     return a, b
 
 
@@ -11414,7 +11232,6 @@ def q_stream_event_type_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     DEFERRED AT BIRTH (differential proof until the round-14
     rotation)."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -11422,13 +11239,10 @@ def q_stream_event_type_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import stats as ST
     from .streaming import ingest as ING
 
-    base = _mutable_stream_base("cusumstream", sf_dir, "events")
-    src = os.path.join(base, "src")
+    base = cache_dir("cusumstream", sf_dir, ["events"])
     mv_path = os.path.join(base, "mv")
 
-    events = load(spark, sf_dir, "events")
-    if not os.path.isfile(os.path.join(src, "_SUCCESS")):
-        shutil.rmtree(base, ignore_errors=True)
+    def seed(tmp: str) -> None:
         empty = spark.createDataFrame(
             [],
             T.StructType(
@@ -11439,20 +11253,13 @@ def q_stream_event_type_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             ),
         )
-        ING.seed_mv(empty, mv_path)
-        events.select(
+        ING.seed_mv(empty, os.path.join(tmp, "mv"))
+        load(spark, sf_dir, "events").select(
             F.col("event_type").alias("grp"),
             F.to_date("ts").alias("day"),
-        ).repartition(4).write.mode("overwrite").parquet(src)
-    # the fold runs EVERY call (exactly-once via the checkpoint; a
-    # half-done fold a dead process left resumes — the
-    # _length_counts_stream discipline)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+        ).repartition(4).write.mode("overwrite").parquet(
+            os.path.join(tmp, "src")
+        )
 
     def fold(batch_df, batch_id):
         changes = batch_df.select(
@@ -11466,14 +11273,7 @@ def q_stream_event_type_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
             changes, mv_path, ["grp", "day"], "n", {}, batch_id
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    daily = ING.read_mv(spark, mv_path).select(
-        "grp", "day", F.col("n").alias("y")
-    )
+    daily = _fold_stream(
+        spark, base, seed, fold, lambda: ING.read_mv(spark, mv_path)
+    ).select("grp", "day", F.col("n").alias("y"))
     return ST.cusum_from_daily(daily)

@@ -44,8 +44,10 @@ Build-once ``.cache`` directories
 Where the reference re-reads its base table for every analysis pass
 (main.py:240-306), the engine builds an index or layout once under
 ``.cache`` and reuses it across calls and processes.  Every such
-directory comes from :func:`cache_dir`, and every immutable one is
-committed by :func:`build_once`.
+directory comes from :func:`cache_dir`, every immutable one is
+committed by :func:`build_once`, and every writer holds its family's
+:func:`cache_lock` — except the winnow and ivf indexes, which their
+operators commit with Spark's ``_SUCCESS`` and no lock.
 
 *The key.*  ``cache_dir(family, sf_dir, tables, **params)`` returns
 ``<CACHE_ROOT>/<family>/<key>``, where the key is one md5 over:
@@ -62,27 +64,37 @@ committed by :func:`build_once`.
 - the sorted build parameters (bucket counts, seeds, shingle sizes).
 
 *The commit.*  ``build_once(path, build)`` returns at once when
-``path`` holds the :data:`COMMIT_MARKER`.  Otherwise ``build(tmp)``
-writes into ``path + ".building-<pid>"``, the marker is written last,
-and the directory is renamed into place — so ``path`` either does not
-exist or is complete, whatever point a crash interrupts.  A build that
-raises leaves nothing committed and the next call rebuilds.  A rename
-that loses a race to a concurrent builder drops its own copy and uses
-the committed one; a marker-less directory already at ``path`` is a
-leftover (builders never write there directly) and is replaced.
+``path`` holds the :data:`COMMIT_MARKER`.  Otherwise it takes the
+family lock, checks the marker again, and :func:`commit` runs
+``build(tmp)`` in ``path + ".building"``, writes the marker last and
+renames the directory into place — so ``path`` either does not exist
+or is complete, whatever point a crash interrupts.  A build that
+raises leaves nothing committed and the next call rebuilds.  A
+``.building`` dir or a marker-less ``path`` is a dead builder's
+leftover (only the lock holder writes either) and is replaced.
 
-Streaming working directories (checkpoints, MERGE targets, mutable
-state) take only their key from :func:`cache_dir`; their own commit
-protocols live with the streaming operators.
+*The lock.*  :func:`cache_lock` holds an exclusive ``flock`` on the
+family directory (``<CACHE_ROOT>/<family>``) itself, so it adds no
+file, and the kernel drops it when its holder dies — no pid
+bookkeeping.  Every writer holds it: ``build_once`` while it commits,
+and each streaming working directory (checkpoint, MERGE target,
+folded MV or state) across its seed, its fold and the open of its
+result, so two processes share one directory and the second folds
+nothing new.  Committed immutable entries are read without the lock.
+A lock holder must not take its own family's lock again, on any
+thread: a second ``flock`` fd blocks even within one process — under
+the lock, seed through :func:`commit`, never :func:`build_once`.
 """
 
 from __future__ import annotations
 
+import fcntl
 import hashlib
 import os
 import shutil
 import threading
-from typing import TYPE_CHECKING, Callable
+from contextlib import contextmanager
+from typing import TYPE_CHECKING, Callable, Iterator
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -175,28 +187,44 @@ def cache_dir(family: str, sf_dir: str, tables, **params) -> str:
     return os.path.join(root, family, key)
 
 
-def build_once(path: str, build: Callable[[str], object]) -> str:
-    """Commit `path` by running ``build(tmp)`` once — the commit
-    contract is in the module docstring.  Returns `path`."""
-    marker = os.path.join(path, COMMIT_MARKER)
-    if os.path.isfile(marker):
+@contextmanager
+def cache_lock(path: str) -> Iterator[None]:
+    """Hold the exclusive lock of the cache family `path` belongs to —
+    an ``flock`` on its parent directory — for the block.  The lock
+    contract is in the module docstring."""
+    family = os.path.dirname(path)
+    os.makedirs(family, exist_ok=True)
+    fd = os.open(family, os.O_RDONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        os.close(fd)
+
+
+def commit(path: str, build: Callable[[str], object]) -> str:
+    """:func:`build_once`'s commit step, for a caller that already
+    holds the family lock.  Returns `path`."""
+    if os.path.isfile(os.path.join(path, COMMIT_MARKER)):
         return path
-    tmp = f"{path}.building-{os.getpid()}"
+    tmp = path + ".building"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     try:
         build(tmp)
         with open(os.path.join(tmp, COMMIT_MARKER), "w"):
             pass
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if os.path.isfile(marker):
-                return path  # lost the race to a concurrent builder
-            # an uncommitted leftover — never a live build, which only
-            # ever writes under its own tmp dir
-            shutil.rmtree(path)
-            os.rename(tmp, path)
+        shutil.rmtree(path, ignore_errors=True)  # an uncommitted leftover
+        os.rename(tmp, path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return path
+
+
+def build_once(path: str, build: Callable[[str], object]) -> str:
+    """Commit `path` by running ``build(tmp)`` once — the commit
+    contract is in the module docstring.  Returns `path`."""
+    if os.path.isfile(os.path.join(path, COMMIT_MARKER)):
+        return path
+    with cache_lock(path):
+        return commit(path, build)

@@ -118,6 +118,17 @@ def test_catalog_builds_no_cache_key_of_its_own():
     assert '".cache"' not in src
 
 
+def test_catalog_commits_through_the_cache_seam_only():
+    # every .cache writer commits through materialize under its family
+    # lock; a pid-keyed dir, a hand-written _SUCCESS check or the old
+    # per-process sweep in the catalog is a second convention growing
+    # back
+    src = open(catalog.__file__).read()
+    assert "os.getpid" not in src
+    assert '"_SUCCESS"' not in src
+    assert "_mutable_stream_base" not in src
+
+
 def test_top_channels_salted_equals_primary(spark, sf_dir):
     _assert_equal_results(spark, sf_dir, "top_channels_salted", "top_channels_by_views")
 

@@ -443,3 +443,33 @@ def test_degree_powerlaw_matches_pure_python(spark):
     r = G.degree_powerlaw(pairs).collect()[0]
     assert r.n_nodes == len(deg)
     assert abs(r.alpha - round(want, 6)) <= 2e-6
+
+
+def test_hits_posture_counts_null_endpoints_as_nodes(spark, monkeypatch):
+    """The auto posture probe counts the nodes the loop carries: the
+    distinct() hubs/auths tables keep a NULL endpoint as a node, so the
+    probe must too.  With the threshold at the NULL-dropping count
+    (2 hubs + 1 authority) the true 5 nodes must take the shuffle
+    posture, exactly as a forced broadcast_scores=False does.  The
+    posture is read off the broadcast hints hits_fixed issues (plans
+    cannot tell: the persisted loop tables match across postures)."""
+    edges = spark.createDataFrame(
+        [("a", "x"), (None, "x"), ("b", None), ("a", None)],
+        "src string, dst string",
+    )
+    hints = []
+    broadcast = G.F.broadcast
+    monkeypatch.setattr(
+        G.F, "broadcast", lambda df: hints.append(1) or broadcast(df)
+    )
+
+    def n_hints(**kw):
+        hints.clear()
+        rows = sorted(map(tuple, G.hits_fixed(edges, **kw).collect()), key=str)
+        return len(hints), rows
+
+    forced_bc = n_hints(broadcast_scores=True)
+    forced_sh = n_hints(broadcast_scores=False)
+    assert forced_bc[0] > forced_sh[0]
+    monkeypatch.setattr(G, "GRAPH_BROADCAST_MAX_NODES", 3)
+    assert n_hints() == forced_sh

@@ -4,13 +4,18 @@ construction must be releasable, and a long session that releases
 after each query keeps the CacheManager bounded — the measured
 failure mode was ~30% planner drag from 12 accumulated entries
 (OPTIMIZATION_r14.md).  Also the build-once ``.cache`` seam: keys
-follow table content and the cache root, commits are all-or-nothing."""
+follow table content and the cache root, commits are all-or-nothing,
+and concurrent builders (processes or threads, alive or killed) commit
+one build."""
 
 from __future__ import annotations
 
+import multiprocessing
 import os
 import shutil
+import signal
 import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -220,22 +225,6 @@ def test_build_once_commits_atomically_and_rebuilds_after_a_failed_build(
     assert os.listdir(tmp_path) == ["idx"]
 
 
-def test_build_once_loser_of_a_race_uses_the_committed_build(tmp_path):
-    committed = tmp_path / "idx"
-
-    def racing(tmp):
-        # another process commits while this one is still building
-        committed.mkdir()
-        (committed / "part-0").write_text("winner")
-        (committed / M.COMMIT_MARKER).write_text("")
-        with open(os.path.join(tmp, "part-0"), "w") as fh:
-            fh.write("loser")
-
-    assert M.build_once(str(committed), racing) == str(committed)
-    assert (committed / "part-0").read_text() == "winner"
-    assert os.listdir(tmp_path) == ["idx"]
-
-
 def test_build_once_replaces_an_uncommitted_leftover(tmp_path):
     path = tmp_path / "idx"
     path.mkdir()
@@ -248,6 +237,103 @@ def test_build_once_replaces_an_uncommitted_leftover(tmp_path):
     M.build_once(str(path), build)
     assert (path / "part-0").read_text() == "fresh"
     assert (path / M.COMMIT_MARKER).is_file()
+
+
+def _append_and_stage(log: str, pause_s: float):
+    """A build body that records each run in `log`, then takes long
+    enough that an unguarded second builder would overlap it."""
+
+    def build(tmp):
+        with open(log, "a") as fh:
+            fh.write("x")
+        time.sleep(pause_s)
+        with open(os.path.join(tmp, "part-0"), "w") as fh:
+            fh.write("built")
+
+    return build
+
+
+def _build_once_after_barrier(path: str, log: str, barrier) -> None:
+    barrier.wait(timeout=60)
+    M.build_once(path, _append_and_stage(log, 0.5))
+
+
+def _build_once_until_killed(path: str, started) -> None:
+    def build(tmp):
+        with open(os.path.join(tmp, "part-0"), "w") as fh:
+            fh.write("dead")
+        started.set()
+        time.sleep(600)
+
+    M.build_once(path, build)
+
+
+def test_build_once_runs_one_build_across_processes(tmp_path):
+    ctx = multiprocessing.get_context("spawn")
+    barrier = ctx.Barrier(2)
+    path, log = str(tmp_path / "fam" / "idx"), str(tmp_path / "builds.log")
+    procs = [
+        ctx.Process(target=_build_once_after_barrier, args=(path, log, barrier))
+        for _ in range(2)
+    ]
+    for p in procs:
+        p.start()
+    for p in procs:
+        p.join(timeout=120)
+    assert [p.exitcode for p in procs] == [0, 0]
+    assert open(log).read() == "x"
+    assert os.listdir(tmp_path / "fam") == ["idx"]
+    assert open(os.path.join(path, "part-0")).read() == "built"
+
+
+def test_build_once_runs_one_build_across_threads(tmp_path):
+    import sys
+
+    n_threads = 8  # more than the cores, so lock waits interleave
+    barrier = threading.Barrier(n_threads)
+    path, log = str(tmp_path / "fam" / "idx"), str(tmp_path / "builds.log")
+    errors = []
+
+    def run():
+        try:
+            barrier.wait(timeout=60)
+            M.build_once(path, _append_and_stage(log, 0.2))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=run) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert open(log).read() == "x"
+    assert os.listdir(tmp_path / "fam") == ["idx"]
+
+
+def test_build_once_after_a_killed_builder_clears_its_staging(tmp_path):
+    ctx = multiprocessing.get_context("spawn")
+    started = ctx.Event()
+    path = str(tmp_path / "fam" / "idx")
+    proc = ctx.Process(target=_build_once_until_killed, args=(path, started))
+    proc.start()
+    try:
+        assert started.wait(timeout=120)
+        assert os.path.isdir(path + ".building")
+    finally:
+        os.kill(proc.pid, signal.SIGKILL)
+        proc.join(timeout=60)
+    # the kernel dropped the dead holder's lock: this call takes it,
+    # clears the leftover staging dir and commits a whole build
+    M.build_once(path, _append_and_stage(str(tmp_path / "builds.log"), 0))
+    assert os.listdir(tmp_path / "fam") == ["idx"]
+    assert sorted(os.listdir(path)) == [M.COMMIT_MARKER, "part-0"]
+    assert open(os.path.join(path, "part-0")).read() == "built"
 
 
 def _copy_fixture(src: str, dst) -> str:

@@ -914,82 +914,52 @@ def test_stream_length_ks_equals_batch_ks(spark):
     )
 
 
-def test_mutable_stream_base_sweep_rules(tmp_path):
-    # r13 (r12 advice + review findings): the sibling sweep must
-    # (a) age-gate legacy shared-key dirs instead of racing a possible
-    # live pre-fix writer, (b) sweep dead-pid dirs AND their sibling
-    # owner tokens, (c) keep a live owner, (d) sweep a dir whose pid
-    # was RECYCLED (owner token mismatch), (e) REFRESH the token when
-    # this process adopts a predecessor's dir (stale tick would make
-    # other sweeps read a live owner as recycled), and (f) survive the
-    # callers' first-run rmtree(base) reseed (the token is a SIBLING
-    # file, not inside the dir)
+def test_second_process_reuses_the_folded_stream_state(
+    spark, tmp_path, monkeypatch
+):
+    # one shared dir per fixture: a second process takes the family
+    # lock, finds the committed seed and a checkpoint that has folded
+    # every batch, and opens the same MV — no reseed, no refold, no
+    # second entry
     import os
-    import shutil
-    import time
-    import uuid
+    import subprocess
+    import sys
 
-    from database_per_keyword_analysis_spark import catalog as CAT
+    from database_per_keyword_analysis_spark import catalog
+    from database_per_keyword_analysis_spark import materialize as M
 
-    family = f"testfam-{uuid.uuid4().hex[:8]}"
-    (tmp_path / "anchor.parquet").write_text("x")
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(CAT.__file__))),
-        ".cache",
-        family,
+    sf = "/root/testdata/sf0.001"
+    root = str(tmp_path / ".cache")
+    monkeypatch.setattr(M, "CACHE_ROOT", root)
+    first = catalog.queries()["stream_length_ks_drift"](spark, sf)
+    rows = repr([tuple(r) for r in first.collect()])
+    base = M.cache_dir("ksstream", sf, ["documents"])
+    current = os.path.join(base, "mv", "current")
+    mtime = os.stat(current).st_mtime_ns
+    script = (
+        "import sys\n"
+        "from database_per_keyword_analysis_spark import catalog\n"
+        "from database_per_keyword_analysis_spark import materialize as M\n"
+        "from database_per_keyword_analysis_spark.session import get_spark\n"
+        "M.CACHE_ROOT = sys.argv[1]\n"
+        "spark = get_spark('second-process', shuffle_partitions=4)\n"
+        "df = catalog.queries()['stream_length_ks_drift'](spark, sys.argv[2])\n"
+        "print(repr([tuple(r) for r in df.collect()]))\n"
+        "spark.stop()\n"
     )
-    try:
-        os.makedirs(root)
-        young_legacy = os.path.join(root, "deadbeef0000")
-        old_legacy = os.path.join(root, "deadbeef0001")
-        dead_pid = os.path.join(root, "deadbeef0002-p4194200")
-        live_kept = os.path.join(root, "deadbeef0003-p1")
-        recycled = os.path.join(root, "deadbeef0004-p1")
-        for d in (young_legacy, old_legacy, dead_pid, live_kept, recycled):
-            os.makedirs(d)
-        with open(dead_pid + ".owner", "w") as fh:
-            fh.write("12345")  # dead owner's leftover token
-        stale = time.time() - 7 * 3600
-        os.utime(old_legacy, (stale, stale))
-        tick1 = CAT._proc_start_tick(1)
-        assert tick1 is not None  # linux container: /proc exists
-        with open(live_kept + ".owner", "w") as fh:
-            fh.write(tick1)
-        with open(recycled + ".owner", "w") as fh:
-            fh.write("0")  # a PREVIOUS incarnation of pid 1
-        # (e): a stale token under OUR pid, as if a dead predecessor
-        # with a recycled pid left it behind — must be refreshed
-        mine_stale = os.path.join(
-            root, f"feedfeed0005-p{os.getpid()}"
-        )
-        os.makedirs(mine_stale)
-
-        base = CAT._mutable_stream_base(family, str(tmp_path), "anchor")
-
-        assert os.path.isdir(young_legacy)  # age-gated, not raced
-        assert not os.path.isdir(old_legacy)  # aged out
-        assert not os.path.isdir(dead_pid)  # dead owner
-        assert not os.path.exists(dead_pid + ".owner")  # token swept too
-        assert os.path.isdir(live_kept)  # live owner, token matches
-        assert not os.path.isdir(recycled)  # pid reuse detected
-        my_tick = CAT._proc_start_tick(os.getpid())
-        # our own dir exists and its SIBLING token carries our tick
-        with open(base + ".owner") as fh:
-            assert fh.read().strip() == my_tick
-        # (e) adoption refresh: write a stale tick, re-enter, refreshed
-        with open(base + ".owner", "w") as fh:
-            fh.write("0")
-        assert CAT._mutable_stream_base(family, str(tmp_path), "anchor") == base
-        with open(base + ".owner") as fh:
-            assert fh.read().strip() == my_tick
-        # (f) a caller's first-run reseed deletes the DIR but the
-        # sibling token survives, keeping the recycle protection
-        shutil.rmtree(base)
-        os.makedirs(base)
-        assert os.path.exists(base + ".owner")
-        assert os.path.isdir(young_legacy) and os.path.isdir(live_kept)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(catalog.__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script, root, sf],
+        cwd=repo,
+        env={**os.environ, "PYTHONPATH": repo},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == rows
+    assert os.stat(current).st_mtime_ns == mtime
+    assert os.listdir(os.path.join(root, "ksstream")) == [os.path.basename(base)]
 
 
 def test_stream_length_ranksum_equals_batch(spark):
